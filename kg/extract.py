@@ -113,7 +113,7 @@ def extract_text(html: bytes | str) -> str:
 # Byte-identity vs extract_text is gated in tests/test_extract.py on
 # fixture pages AND an adversarial corpus covering every bail
 # condition. Measured ~1.6x per page over html.parser; the bigger win
-# is that it powers the fused pipeline UDF (kg/pipeline.py).
+# is that it powers the turbo pipeline kernel (kg/pipeline.py).
 
 _TOK = re.compile(r"<!--.*?-->|<[^<>]*>", re.S)
 _TAGNAME = re.compile(r"</?([a-zA-Z][a-zA-Z0-9]*)")
@@ -256,9 +256,13 @@ def extract_text_fast(html: bytes | str) -> str | None:
     return "\n".join(blocks)
 
 
-def extract_text_auto(html: bytes | str) -> str:
+def extract_text_auto(html: bytes | str | None) -> str:
     """Fast path with spec fallback — the extraction kernel every
-    distributed operator uses (identical output by construction)."""
+    distributed operator uses (identical output by construction).
+    NULL html extracts to "" (no sentences, so no mentions or triples)
+    on every path: staged UDF, turbo kernel and streaming."""
+    if html is None:
+        return ""
     out = extract_text_fast(html)
     return extract_text(html) if out is None else out
 

@@ -9,9 +9,8 @@ makes it a guarantee).
 
 K4 (BASELINE.json:6 "embedding cosine re-rank"): mention-context
 embeddings come from a deterministic hashed char-3-gram encoder
-(vectorized pandas UDF); candidate entity vectors join in (broadcast
-for dictionary-sized entity sets; flip to shuffle join via
-``broadcast_entities=False`` when the KB is huge). The cosine itself
+(vectorized pandas UDF); candidate entity vectors join in by broadcast
+(the entity set is dictionary-sized). The cosine itself
 is a **pure Catalyst expression** (zip_with + aggregate) — no Python
 in the hot path — and top-k is a window row_number with a
 deterministic (cosine desc, entity_id asc) tie-break.
@@ -173,7 +172,6 @@ def rerank(
     candidates: DataFrame,
     entity_vecs: DataFrame,
     k: int = 1,
-    broadcast_entities: bool = True,
     by_surface: bool = True,
 ) -> DataFrame:
     """K4: cosine(mention-context vec, entity vec), keep top-k.
@@ -186,7 +184,7 @@ def rerank(
     broadcast the verdicts back onto mentions. The per-mention window
     path (``by_surface=False``) is what a sentence-contextual encoder
     would need; both produce identical results for this encoder."""
-    ev = F.broadcast(entity_vecs) if broadcast_entities else entity_vecs
+    ev = F.broadcast(entity_vecs)
     if by_surface:
         pairs = candidates.select("surface", "entity_id").distinct()
         scored_pairs = (

@@ -169,7 +169,7 @@ class _Model:
     # measured 12.4 -> 0.6 us/sentence on the bench fixture with
     # OUTPUT IDENTICAL to forward_tags (argmax over the same cached
     # float32 logits row, same first-index tie-break; asserted in
-    # tests/test_ner_model.py). forward_tags stays as the
+    # tests/test_ner.py). forward_tags stays as the
     # batched/padded reference shape for the visible M5 operator.
     _WORD_TAG_CACHE_MAX = 1 << 20  # bound worker memory on open vocab
 
@@ -263,17 +263,14 @@ def _detect_spans_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         )
 
 
-def detect_mentions(
-    df: DataFrame, words_col: str = "words", carry_words: bool = False
-) -> DataFrame:
+def detect_mentions(df: DataFrame, words_col: str = "words") -> DataFrame:
     """sentences(url, sent_id, words) -> mentions table, one fused
     Arrow stage + Catalyst explode/slice for surfaces.
 
-    ``carry_words=True`` keeps the sentence token array on each
-    mention row: K6's between-text then needs NO join back to the
-    sentences table (saves a full shuffle+sort of the corpus-sized
-    sentence relation at the cost of duplicating token arrays across
-    a sentence's mentions)."""
+    Each mention row keeps the sentence token array as ``words``: K6's
+    between-text then needs NO join back to the sentences table (saves
+    a full shuffle+sort of the corpus-sized sentence relation at the
+    cost of duplicating token arrays across a sentence's mentions)."""
     spans = df.withColumn("_spans", _detect_spans_udf(F.col(words_col))).select(
         "url",
         "sent_id",
@@ -286,7 +283,7 @@ def detect_mentions(
             )
         ).alias("span"),
     )
-    cols = [
+    return spans.select(
         F.col("url"),
         F.col("sent_id"),
         F.xxhash64("url", "sent_id", F.col("span.begin")).alias("mention_id"),
@@ -302,7 +299,5 @@ def detect_mentions(
             ),
         ).alias("surface"),
         F.lit(1.0).alias("score"),
-    ]
-    if carry_words:
-        cols.append(F.col("_words").alias("words"))
-    return spans.select(*cols)
+        F.col("_words").alias("words"),
+    )

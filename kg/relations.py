@@ -1,12 +1,14 @@
 """K5 co-sentence pair generation + K6 relation extraction.
 
-K5 (BASELINE.json:6 "co-sentence entity pairs"): self-join of linked
-mentions on (url, sent_id) with a textual-order residual
-(m1.begin < m2.begin) — an equi-join with an inequality filter, NOT a
-cross join; the shuffle key is the sentence, so pair blowup stays
-bounded by per-sentence mention counts.
+K5 (BASELINE.json:6 "co-sentence entity pairs"): ordered mention pairs
+per (url, sent_id) with a textual-order residual (subj.begin <
+obj.begin). The pipeline uses the grouped single-shuffle form
+(pair_gen_grouped); the self-join form (pair_gen) is its reference.
+Either way the key is the sentence, so pair blowup stays bounded by
+per-sentence mention counts.
 
-K6: deterministic predicate rules over the between-mention text.
+K6: deterministic predicate rules over the between-mention text, read
+from the sentence tokens every linked mention carries (``words``).
 Entirely Catalyst (slice + concat_ws + CASE) — zero Python. The rule
 table mirrors the fixture generator's templates, which stand in for
 the reference's relation semantics (SURVEY.md §5: frozen oracles
@@ -29,25 +31,24 @@ CONFIDENCE_THRESHOLD = 0.5
 
 
 def pair_gen(linked: DataFrame) -> DataFrame:
-    """K5: ordered co-sentence mention pairs (subject textual-first).
+    """K5 reference: ordered co-sentence mention pairs (subject
+    textual-first) as a self-join of linked mentions on (url, sent_id)
+    — an equi-join with an inequality filter, NOT a cross join.
 
     Shuffle-hash hinted: sentence keys are high-cardinality and the
     per-key groups are tiny, so hashing beats the sort-merge default.
-    If the linked mentions carry ``words`` (see detect_mentions
-    carry_words), the subject side keeps them so K6 needs no further
-    join."""
-    subj_cols = [
-        F.col("url"),
-        F.col("sent_id"),
+    The subject side keeps the mentions' sentence ``words`` so K6
+    needs no further join."""
+    m1 = linked.select(
+        "url",
+        "sent_id",
         F.col("mention_id").alias("subj_mention"),
         F.col("entity_id").alias("subj_entity"),
         F.col("ent_type").alias("subj_type"),
         F.col("begin").alias("subj_begin"),
         F.col("end").alias("subj_end"),
-    ]
-    if "words" in linked.columns:
-        subj_cols.append(F.col("words"))
-    m1 = linked.select(*subj_cols)
+        "words",
+    )
     m2 = linked.select(
         "url",
         "sent_id",
@@ -70,7 +71,8 @@ def pair_gen_grouped(linked: DataFrame) -> DataFrame:
     O(k^2) with k<=~10), so one exchange of the linked table replaces
     two exchanges + a join — and, crucially for a lazy single-action
     pipeline, the upstream NER DAG executes ONCE instead of once per
-    join side. Requires carry_words mentions (kg.ner.model)."""
+    join side. Reads the sentence ``words`` every mention carries
+    (kg.ner.model.detect_mentions)."""
     ms = F.collect_list(
         F.struct("mention_id", "entity_id", "ent_type", "begin", "end")
     ).alias("ms")
@@ -109,25 +111,12 @@ def pair_gen_grouped(linked: DataFrame) -> DataFrame:
 
 
 def extract_relations(
-    pairs: DataFrame,
-    sentences: DataFrame | None = None,
-    threshold: float = CONFIDENCE_THRESHOLD,
+    pairs: DataFrame, threshold: float = CONFIDENCE_THRESHOLD
 ) -> DataFrame:
-    """K6: pairs + sentence words -> triples_raw.
+    """K6: pairs carrying their sentence ``words`` -> triples_raw.
 
     between-text = words strictly between the two spans; predicate via
-    the rule table (whole-stage-codegen CASE expression). If the pairs
-    already carry ``words`` (carry_words path), no sentence join runs."""
-    if "words" in pairs.columns:
-        with_words = pairs
-    else:
-        if sentences is None:
-            raise ValueError("pairs lack words; pass the sentences table")
-        with_words = pairs.join(
-            sentences.select("url", "sent_id", "words").hint("shuffle_hash"),
-            ["url", "sent_id"],
-            "inner",
-        )
+    the rule table (whole-stage-codegen CASE expression)."""
     between = F.lower(
         F.concat_ws(
             " ",
@@ -146,7 +135,7 @@ def extract_relations(
         pred_expr = F.when(between == text, F.lit(pred)).otherwise(pred_expr)
         conf_expr = F.when(between == text, F.lit(conf)).otherwise(conf_expr)
     return (
-        with_words.withColumn("pred", pred_expr)
+        pairs.withColumn("pred", pred_expr)
         .withColumn("confidence", conf_expr)
         .filter(F.col("pred").isNotNull())
         .filter(F.col("confidence") >= threshold)

@@ -160,7 +160,7 @@ def main() -> int:
 
     # --- KG hot path: exactly the designed Arrow boundaries per stage ----
     # audit each stage's plan from a materialized input (the orchestrated
-    # execution shape); tree-string counting on the fused lazy plan would
+    # execution shape); tree-string counting on one lazy staged plan would
     # overcount shared subtrees.
     import tempfile
 
@@ -200,9 +200,9 @@ def main() -> int:
         "link stage: 1 Arrow boundary (surface embedding) + broadcast join",
         arrow_count(linked) == 1 and "BroadcastHashJoin" in plan_of(linked),
     )
-    traw = P.stage_triples_raw(linked, sents_m)
-    # K5 self-joins linked, so its (single) Arrow subtree prints twice
-    # in the tree; the relation rules themselves add no Python.
+    traw = P.stage_triples_raw(linked)
+    # K5 groups linked by sentence (one consumer, so its Arrow subtree
+    # prints once); the relation rules themselves add no Python.
     check(
         "relation stage adds no Python (Catalyst CASE rules)",
         arrow_count(traw) <= 2 * arrow_count(linked),

@@ -25,6 +25,22 @@ def _gold_set(spark, n, noise):
     }
 
 
+def _staged_triples(pages, aliases, evecs, comps):
+    """The staged K1..K8 composition (the spec) as one lazy plan."""
+    from kg.pipeline import (
+        stage_extract,
+        stage_linked,
+        stage_mentions,
+        stage_sentences,
+        stage_triples,
+        stage_triples_raw,
+    )
+
+    sents = stage_sentences(stage_extract(pages))
+    linked = stage_linked(stage_mentions(sents), aliases, evecs)
+    return stage_triples(stage_triples_raw(linked), comps)
+
+
 def test_clean_triples_exact_vs_gold(spark, clean_result):
     got = _triple_set(clean_result["triples"])
     want = _gold_set(spark, 100, 0.0)
@@ -122,28 +138,13 @@ def test_turbo_triples_equal_staged_composition(spark):
     `triples` must produce exactly the staged K1..K8 composition's
     rows — on clean AND noise-injected pages (corrupted surfaces,
     shifted spans)."""
-    from kg.pipeline import (
-        stage_components,
-        stage_extract,
-        stage_linked,
-        stage_mentions,
-        stage_sentences,
-        stage_triples,
-        stage_triples_raw,
-        turbo_triples_raw,
-    )
+    from kg.pipeline import stage_components, stage_triples, turbo_triples_raw
 
     aliases, evecs = FX.aliases_df(spark), FX.entity_vecs_df(spark)
     comps = stage_components(aliases)
     for noise in (0.0, 0.05):
         pages = FX.gen_pages(spark, 150, seed=11, noise=noise)
-        sents = stage_sentences(stage_extract(pages))
-        staged = stage_triples(
-            stage_triples_raw(
-                stage_linked(stage_mentions(sents), aliases, evecs), sents
-            ),
-            comps,
-        )
+        staged = _staged_triples(pages, aliases, evecs, comps)
         turbo = stage_triples(turbo_triples_raw(pages, aliases, evecs), comps)
         a = set(map(tuple, staged.collect()))
         b = set(map(tuple, turbo.collect()))
@@ -172,27 +173,34 @@ def test_python_split_twins_match_catalyst(spark):
         assert got == want
 
 
-def test_fused_path_equals_staged(spark, clean_pages):
-    """The zero-exchange fused plan must produce exactly the staged
-    path's triples (inner verdict joins commute with pair formation)."""
-    a = (
-        run_pipeline(
-            spark, clean_pages, FX.aliases_df(spark), FX.entity_vecs_df(spark)
-        )["triples"]
-        .select("subj", "pred", "obj", "url", "sent_id")
-        .distinct()
+def test_fused_keyword_accepted_and_ignored(spark, clean_pages):
+    """``fused`` no longer selects a plan; passing it must still work
+    and give the default lazy path's triples."""
+    aliases, evecs = FX.aliases_df(spark), FX.entity_vecs_df(spark)
+    a = run_pipeline(spark, clean_pages, aliases, evecs)
+    b = run_pipeline(spark, clean_pages, aliases, evecs, fused=True)
+    assert set(b) == set(a) == {"triples_raw", "components", "triples"}
+    assert _triple_set(b["triples"]) == _triple_set(a["triples"])
+
+
+def test_null_html_yields_no_triples(spark):
+    """A NULL-html page extracts to no sentences: 20 pages plus one
+    NULL row give exactly the 20 pages' triples on the lazy (turbo)
+    path and on the staged composition, instead of failing the task."""
+    import datetime
+
+    from kg.pipeline import stage_components
+
+    aliases, evecs = FX.aliases_df(spark), FX.entity_vecs_df(spark)
+    comps = stage_components(aliases)
+    pages = FX.gen_pages(spark, 20, seed=42)
+    null_row = spark.createDataFrame(
+        [("https://null.example.com/0", datetime.datetime(2024, 1, 1), None, None, "en")],
+        FX.PAGES_SCHEMA,
     )
-    b = (
-        run_pipeline(
-            spark,
-            clean_pages,
-            FX.aliases_df(spark),
-            FX.entity_vecs_df(spark),
-            fused=True,
-        )["triples"]
-        .select("subj", "pred", "obj", "url", "sent_id")
-        .distinct()
-    )
-    assert a.subtract(b).count() == 0
-    assert b.subtract(a).count() == 0
-    assert a.count() == b.count()
+    with_null = pages.unionByName(null_row)
+    want = _triple_set(run_pipeline(spark, pages, aliases, evecs)["triples"])
+    assert want
+    lazy = run_pipeline(spark, with_null, aliases, evecs)["triples"]
+    assert _triple_set(lazy) == want
+    assert _triple_set(_staged_triples(with_null, aliases, evecs, comps)) == want

@@ -46,21 +46,3 @@ def test_relations_from_grouped_pairs(spark):
         for r in extract_relations(pair_gen_grouped(linked)).collect()
     }
     assert triples == {(101, "works_for", 201), (202, "based_in", 301)}
-
-
-def test_relations_fallback_sentence_join(spark):
-    """Without carried words, K6 joins the sentences table."""
-    linked = _linked_df(spark).drop("words")
-    sentences = spark.createDataFrame(
-        [
-            ("u1", 0, ["Alinda", "Varek", "works", "at", "Novari", "Labs", "."]),
-            ("u2", 3, ["Quellix", "is", "based", "in", "Valdoria", "."]),
-            ("u3", 1, ["Alinda", "Varek", "."]),
-        ],
-        "url string, sent_id int, words array<string>",
-    )
-    triples = {
-        (r["subj_entity"], r["pred"], r["obj_entity"])
-        for r in extract_relations(pair_gen(linked), sentences).collect()
-    }
-    assert triples == {(101, "works_for", 201), (202, "based_in", 301)}
