@@ -1035,8 +1035,8 @@ def minhash_signatures_udf(
 SUBSTR_N = 5  # word-gram width for span-level duplicate detection
 
 # boilerplate planted into every 5th doc so the operator has real
-# cross-doc spans to find in the random-token fixture (the
-# decontaminate/pii pattern: planted identically in the oracle)
+# cross-doc spans to find in the random-token fixture (planted
+# identically in the oracle, so both sides see the same corpus)
 SUBSTR_BOILER = "all rights reserved contact the site admin today"
 
 
@@ -1153,7 +1153,7 @@ def dedup_substring_apply(docs: DataFrame, n: int = SUBSTR_N) -> DataFrame:
     gram-keyed shuffle, and buys back little on boilerplate).
     Emits (doc_id, n_tokens, n_removed, text_clean); text_clean is
     the surviving tokens single-space-joined (whitespace normalizes —
-    the rest of a curation pipeline tokenizes with ws_tokens anyway).
+    downstream consumers tokenize with ws_tokens anyway).
 
     Scale shape — three bounded shuffles, no pair space: gram-hash
     agg for the shared set (partial agg collapses hot boilerplate
@@ -1202,8 +1202,8 @@ def dedup_substring_apply(docs: DataFrame, n: int = SUBSTR_N) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.collect_set("pos").alias("cov"))
     )
-    # sequence(1, 0) DESCENDS (the bigram_lm gotcha): empty docs must
-    # short-circuit to an empty index list, not filter over [1, 0]
+    # sequence(1, 0) DESCENDS to [1, 0], so empty docs must
+    # short-circuit to an empty index list
     kept_idx = F.when(
         F.size("t") >= 1,
         F.expr(

@@ -68,9 +68,9 @@ _SQL_WS_REGEX = "[ \\t\\n\\x0B\\f\\r]+"
 
 def ws_tokens(col, lower: bool = False):
     """Whitespace tokens of a string column, empties dropped — the
-    one shared tokenizer expression behind decontaminate /
-    pack_sequences / tfidf / simhash (drift in any one of them would
-    silently diverge from its hand-written SQL twin)."""
+    one shared tokenizer expression behind quality stats / tfidf /
+    shingling / simhash (drift in any one of them would silently
+    diverge from its hand-written SQL twin)."""
     c = F.lower(col) if lower else col
     return F.filter(F.split(c, WS_REGEX), lambda t: t != F.lit(""))
 

@@ -105,26 +105,15 @@ def main() -> int:
     )
 
     # --- no Python in relational plans ----------------------------------
-    from kg import curation  # noqa: F401 (register curation queries)
-
     for name in [
         "q1_pricing_summary", "q6_revenue_filter", "q5_region_revenue",
         "q_window_topk_orders", "q_sessionize", "q_rollup_lineitem",
         "q_events_json", "q_doc_stats", "dedup_ngram_jaccard",
         "ann_bruteforce_topk", "text_quality", "text_fingerprint",
-        "text_chunking", "vocab_topk", "corpus_sample_stratified",
-        "text_pii_scrub", "text_repetition", "text_decontaminate",
-        "corpus_shuffle_batches", "corpus_pack_sequences", "text_tfidf",
+        "text_tfidf",
     ]:
         p = plan_of(R.QUERIES[name](spark, sf_dir))
         check(f"{name} stays JVM-side", "Python" not in p and "Arrow" not in p)
-
-    # --- decontamination: per-row literal intersect, no join/shuffle ----
-    pd_ = plan_of(R.QUERIES["text_decontaminate"](spark, sf_dir))
-    check(
-        "decontaminate is map-only (zero Exchange, zero Join)",
-        "Exchange" not in pd_ and "Join" not in pd_,
-    )
 
     # --- bucketed fact-fact join: shuffle eliminated at write time -------
     bj2 = R.QUERIES["q_bucketed_join"](spark, sf_dir)
@@ -209,11 +198,10 @@ def main() -> int:
     )
 
     # --- r5 additions -----------------------------------------------------
-    # lm_score / substring dedup / triangles / q17 / mix: all JVM-side,
-    # no cartesian anywhere, and the intended join strategies appear.
+    # substring dedup / triangles / q17: all JVM-side, no cartesian
+    # anywhere, and the intended join strategies appear.
     for name in [
-        "text_lm_score", "dedup_substring_ngrams", "graph_triangles",
-        "q17_small_qty_revenue", "corpus_mix_domains",
+        "dedup_substring_ngrams", "graph_triangles", "q17_small_qty_revenue",
     ]:
         qn = (
             R.QUERIES[name]
@@ -230,11 +218,6 @@ def main() -> int:
     check(
         "q17 part filter broadcasts into the lineitem scans (semi)",
         "BroadcastHashJoin" in p17 and "LeftSemi" in p17,
-    )
-    pmix = plan_of(R.QUERIES["corpus_mix_domains"](spark, sf_dir))
-    check(
-        "mix_domains rates join back via broadcast",
-        "BroadcastHashJoin" in pmix,
     )
     plpa = plan_of(
         __import__("__spark_entry__").all_queries()["graph_label_propagation"](
@@ -298,14 +281,7 @@ def main() -> int:
     )
 
     # --- r6 additions -----------------------------------------------------
-    # multi-n decontamination must keep the single-n shape: every gram
-    # width evaluates in ONE map-only projection (no join, no shuffle)
     all_q = __import__("__spark_entry__").all_queries()
-    pdm = plan_of(all_q["text_decontaminate_multi"](spark, sf_dir))
-    check(
-        "decontaminate_multi is map-only (zero Exchange, zero Join)",
-        "Exchange" not in pdm and "Join" not in pdm and "Python" not in pdm,
-    )
     # span-dedup APPLY: gram-hash/doc-keyed shuffles only — JVM-side,
     # no cartesian, and no broadcast of the corpus-sized gram side
     psa = plan_of(all_q["dedup_substring_apply"](spark, sf_dir))

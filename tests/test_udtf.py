@@ -65,6 +65,16 @@ def test_driver_registry_contract():
     # every driver query that claims an oracle has one registered
     oracles = E.oracle_sql()
     assert "q_set_ops" in oracles and "stream_sliding_value" in oracles
+    # no orphan oracle: check_oracles only iterates the queries, so an
+    # oracle left behind by a deleted query would never run
+    orphans = set(oracles) - set(aq)
+    assert not orphans, orphans
+    # the extra tier is registered and disjoint from the driver 50
+    from kg.relational import EXTRA
+
+    assert EXTRA <= set(aq), EXTRA - set(aq)
+    assert not EXTRA & set(E.DRIVER_ORDER), EXTRA & set(E.DRIVER_ORDER)
+    assert len(aq) == 50 + len(EXTRA)
 
 
 @pytest.mark.parametrize("n", [0, 1])
