@@ -814,8 +814,9 @@ def stream_neardup_gate_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     partners), and the per-doc count is the one stateful operator. At
     100 TB the corpus index does not broadcast: it is written
     bucketed by (band, bucket) once and each micro-batch co-locates
-    into it (or a bloom over bucket keys prefilters, q_bloom_prune
-    shape); the fixture-sized index here takes the broadcast path."""
+    into it (or a bloom filter over the bucket keys prefilters the
+    stream side); the fixture-sized index here takes the broadcast
+    path."""
     from kg.dedup import minhash_band_buckets_maponly
     from kg.io import materialize_barrier
 

@@ -1,6 +1,6 @@
 """AQE skew-join vs manual salting A/B on a planted-skew shuffle join.
 
-The 100 TB operator-choice question the salted ops raise: when does
+The 100 TB operator-choice question for skewed joins: when does
 built-in AQE skew handling suffice, and when is explicit salting still
 required? This script measures a planted-skew fact-dim join (90% of
 fact rows on ONE key, dim too big to broadcast by config) three ways
@@ -12,7 +12,7 @@ on the same session:
      oversized partition at runtime (zero code changes); thresholds
      are lowered so the ~100 MB test partition trips the same logic
      a multi-GB partition trips at the 256 MB production default
-  C. manual xxhash64 salting (q_skew_salted_join's shape): fact
+  C. manual xxhash64 salting (`salted_join` below): fact
      carries a row salt, dim replicates per salt, join keys on
      (key, salt)
 

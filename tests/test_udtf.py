@@ -75,6 +75,28 @@ def test_driver_registry_contract():
     assert EXTRA <= set(aq), EXTRA - set(aq)
     assert not EXTRA & set(E.DRIVER_ORDER), EXTRA & set(E.DRIVER_ORDER)
     assert len(aq) == 50 + len(EXTRA)
+    # the extra tier is closed: a new demo query, or one left behind
+    # by a deletion, changes this set
+    assert EXTRA == {
+        "ann_ivf_float",
+        "dedup_apply", "dedup_clusters", "dedup_minhash_xxh64",
+        "dedup_simhash_pairs", "dedup_substring_apply",
+        "dedup_substring_ngrams",
+        "graph_bfs_hops", "graph_label_propagation", "graph_triangles",
+        "kg_pagerank",
+        "multimodal_decode", "multimodal_features",
+        "sketch_cms_heavy_hitters", "sketch_histogram_quantiles",
+        "sketch_hll_distinct",
+        "stream_kg_mentions", "stream_neardup_gate", "stream_stateful_totals",
+        "stream_static_join", "stream_stream_join",
+        "stream_upsert_foreachbatch",
+        "text_tfidf",
+    }, sorted(EXTRA)
+    # every query kg.relational itself defines is one of the 50
+    from kg import relational as R
+
+    own = {n for n, fn in R.QUERIES.items() if fn.__module__ == R.__name__}
+    assert own and not own & EXTRA, sorted(own & EXTRA)
 
 
 @pytest.mark.parametrize("n", [0, 1])
